@@ -444,6 +444,48 @@ def duplicated_python_udf_calls(df: DataFrame) -> list[str]:
     return sorted(out)
 
 
+#: JVM string kernels quadratic in text length — expensive enough that
+#: evaluating one call in two operators is a measurable cost
+_JVM_KERNEL = re.compile(r"\blevenshtein\(")
+
+
+def _jvm_kernel_calls(line: str) -> list[str]:
+    """Every kernel call on ``line``, with its balanced argument list."""
+    calls = []
+    for m in _JVM_KERNEL.finditer(line):
+        depth = 0
+        for k in range(m.end() - 1, len(line)):
+            depth += {"(": 1, ")": -1}.get(line[k], 0)
+            if depth == 0:
+                calls.append(line[m.start():k + 1])
+                break
+    return calls
+
+
+def duplicated_jvm_kernel_calls(df: DataFrame) -> list[str]:
+    """Exact-duplicate ``levenshtein`` calls (same argument expression
+    ids) evaluated in MORE THAN ONE operator of a plan fragment — the
+    JVM twin of ``duplicated_python_udf_calls``. Filtering on a
+    projected kernel output makes Catalyst substitute the alias into
+    the pushed-down filter, so the kernel runs in the filter (or join
+    condition) AND in the projection: q108's select-then-filter shape
+    evaluated its quadratic Levenshtein three times per pair. Spark
+    does no common-subexpression elimination across operators.
+
+    Fragments are split exactly as for the Python-UDF gate (outer plan
+    plus each distinct InMemoryRelation subtree print); each line of a
+    simple-mode plan is one operator."""
+    outer, cached = _strip_inmemory_subtrees(plan_string(df, "simple"))
+    out: set[str] = set()
+    for fragment in [outer, *cached]:
+        seen: dict[str, int] = {}
+        for line in fragment.splitlines():
+            for call in set(_jvm_kernel_calls(line)):
+                seen[call] = seen.get(call, 0) + 1
+        out.update(c for c, n in seen.items() if n > 1)
+    return sorted(out)
+
+
 def plan_fingerprint(df: DataFrame) -> dict:
     """Positive plan-shape snapshot for the committed fingerprint
     ledger (round-11 VERDICT task 4).

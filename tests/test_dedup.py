@@ -401,6 +401,79 @@ def test_levenshtein_engine_parity_and_codepoint_semantics(spark, duck):
     assert got[("café", "cafe")][0] == 1
 
 
+def _lev_codepoints(a: str, b: str) -> int:
+    """Reference Levenshtein over codepoints (Python str indexing)."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_edit_verify_matches_codepoint_reference(spark):
+    """edit_verify's rows equal a pure-Python codepoint Levenshtein
+    reference of the unbounded gate, whatever the input partitioning:
+    pairs at exactly the per-pair bound K = floor(0.4 · max_len) and at
+    K + 1, Devanagari / CJK / astral-plane text, a NULL text, a pair
+    whose id is missing from the corpus, a pass-through est_jaccard
+    column, and one hub document paired with 22 others."""
+    from setu_spark.operators.dedup import EDIT_SIM_THRESHOLD, edit_verify
+    from setu_spark.operators.textstats import _round6
+
+    hub = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMN"  # 40 codepoints
+    texts = {1: hub}
+    for i in range(22):  # i substitutions; K = 16 for the equal lengths
+        texts[2 + i] = "#" * i + hub[i:]
+    texts[30] = hub[:31]               # d = 9, K = 16: kept
+    texts[31] = hub + "0123456789"     # d = 10, K = 20: kept
+    texts[32] = hub + "0123456789" * 3  # |len diff| = 30 > K = 28: dropped
+    texts[40] = "नमस्ते दुनिया यह एक परीक्षण है"
+    texts[41] = "नमस्कार दुनिया यह एक परीक्षा है"
+    texts[42] = "日本語のテキストを比較します"
+    texts[43] = "日本語のてきすとを比較します"
+    texts[44] = "emoji 😀 text 🎉 here"
+    texts[45] = "emoji 😃 text 🎊 here"
+    texts[50] = None
+    pairs = [(1, j, 0.5 + j / 100) for j in range(2, 24)]
+    pairs += [(1, 30, 0.9), (1, 31, 0.8), (1, 32, 0.7), (40, 41, 0.6),
+              (42, 43, 0.6), (44, 45, 0.6), (1, 50, 0.6), (50, 2, 0.6),
+              (1, 99, 0.6)]
+
+    expected = set()
+    bounds = set()
+    for a, b, est in pairs:
+        ta, tb = texts.get(a), texts.get(b)
+        if ta is None or tb is None:
+            continue
+        d = _lev_codepoints(ta, tb)
+        m = max(len(ta), len(tb))
+        bounds.add(d - (2 * m) // 5)  # d - K
+        sim = 1 - d / m
+        if sim >= EDIT_SIM_THRESHOLD:
+            expected.add((a, b, est, d, _round6(sim)))
+    # the fixture reaches both sides of the bound
+    assert {0, 1} <= bounds, bounds
+
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    pair_df = spark.createDataFrame(
+        pairs, "id_a long, id_b long, est_jaccard double"
+    )
+    for d_parts, p_parts in ((1, 1), (7, 5)):
+        got = edit_verify(
+            docs.repartition(d_parts), pair_df.repartition(p_parts)
+        )
+        assert got.columns == [
+            "id_a", "id_b", "est_jaccard", "edit_dist", "edit_sim"
+        ]
+        rows = {tuple(r) for r in got.collect()}
+        assert rows == expected, (d_parts, rows ^ expected)
+
+
 def test_connected_components_nonconvergence_raises(spark):
     """A chain longer than max_iterations hops must raise (round-4
     ADVICE), not return partial labels that mismatch the exact

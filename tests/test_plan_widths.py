@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 import __spark_entry__ as entrymod
 from setu_spark.plans.inspect import (
     corpus_exchange_widths,
+    duplicated_jvm_kernel_calls,
     duplicated_python_udf_calls,
     unbounded_cartesian_joins,
     unpartitioned_corpus_windows,
@@ -115,6 +116,57 @@ def test_no_registered_query_reruns_a_python_udf(spark):
     assert not offenders, (
         f"duplicated Python UDF evaluation (q42/q48 class): {offenders}"
     )
+
+
+def test_no_registered_query_reruns_a_jvm_kernel(spark):
+    """The JVM twin of the Python-UDF gate: filtering on a projected
+    ``levenshtein`` output makes Catalyst substitute the alias into the
+    pushed filter, so the quadratic kernel runs in the filter (or join
+    condition) and again in the projection — q108 evaluated it three
+    times per pair this way. Every registered plan must evaluate each
+    exact kernel call in one operator."""
+    offenders = {}
+    for name, fn in sorted(entrymod.queries().items()):
+        dupes = duplicated_jvm_kernel_calls(fn(spark, SF_DIR))
+        spark.catalog.clearCache()
+        if dupes:
+            offenders[name] = dupes
+    assert not offenders, (
+        f"duplicated JVM kernel evaluation (q108 class): {offenders}"
+    )
+
+
+def test_jvm_kernel_dup_gate_catches_planted_offender(spark):
+    """Positive control: the select-then-filter verify shape (kernel
+    projected under an alias, then filtered on) must flag; the same
+    kernel behind a Generate, and two DIFFERENT kernel calls in two
+    operators, must not."""
+    from setu_spark.operators.dedup import edit_verify
+    from setu_spark.sources.io import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    pairs = docs.select(
+        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
+    )
+    joined = (
+        pairs.join(docs.select(F.col("doc_id").alias("id_a"),
+                               F.col("text").alias("text_a")), "id_a")
+        .join(docs.select(F.col("doc_id").alias("id_b"),
+                          F.col("text").alias("text_b")), "id_b")
+    )
+    planted = joined.select(
+        "id_a", "id_b",
+        F.expr("levenshtein(text_a, text_b, 100)").alias("d"),
+    ).filter(F.col("d") >= 0)
+    assert duplicated_jvm_kernel_calls(planted)
+    assert not duplicated_jvm_kernel_calls(edit_verify(docs, pairs))
+    two_kernels = joined.select(
+        "text_a", "text_b",
+        F.levenshtein("text_a", "text_b").alias("d1"),
+    ).repartition(2).select(
+        "d1", F.levenshtein("text_b", F.lit("x")).alias("d2")
+    )
+    assert not duplicated_jvm_kernel_calls(two_kernels)
 
 
 def test_udf_dup_gate_sees_through_cached_plans(spark):

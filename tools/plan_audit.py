@@ -4,7 +4,8 @@
 The q28 lesson: a scale-killer can cost 3s at sf0.1 and 195s at 60M
 rows, so wall-clock at test scale does not catch it — plan shape does.
 For every registered query this prints (shuffles, widest exchange
-input arity, Expand present) and flags outliers, so the q28 class
+input arity, Expand present, a JVM kernel such as levenshtein evaluated
+in two operators) and flags outliers, so the q28 class
 (a wide aggregation buffer riding a per-row exchange) is a one-command
 sweep instead of a lucky explain.
 
@@ -120,6 +121,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from setu_spark.plans.inspect import (
         corpus_exchange_widths,
+        duplicated_jvm_kernel_calls,
         duplicated_python_udf_calls,
         exchange_widths,
         has_expand,
@@ -149,7 +151,8 @@ def main() -> int:
             w = max(cw) if cw else 0
             n = shuffle_count(df)
             ex = has_expand(df)
-            # the other three registry gates, surfaced in the same
+            dk = bool(duplicated_jvm_kernel_calls(df))
+            # the other registry gates, surfaced in the same
             # one-command audit (each is also a CI test in
             # tests/test_plan_widths.py)
             gates = []
@@ -157,6 +160,8 @@ def main() -> int:
                 gates.append("UNPART-WINDOW")
             if duplicated_python_udf_calls(df):
                 gates.append("DUP-UDF")
+            if dk:
+                gates.append("DUP-JVM-KERNEL")
             if unbounded_cartesian_joins(df):
                 gates.append("CARTESIAN")
         except Exception as exc:  # noqa: BLE001
@@ -170,11 +175,12 @@ def main() -> int:
             mark += " <-- " + ",".join(gates)
         if w > wide or gates:
             flagged.append(name)
-        rows.append((w, n, ex, name, mark, widths))
-    for w, n, ex, name, mark, widths in sorted(rows, reverse=True):
+        rows.append((w, n, ex, dk, name, mark, widths))
+    for w, n, ex, dk, name, mark, widths in sorted(rows, reverse=True):
         print(
             f"corpus_width={w:3d} all={widths} shuffles={n:2d} "
-            f"expand={'Y' if ex else 'n'}  {name}{mark}"
+            f"expand={'Y' if ex else 'n'} dup_kernel={'Y' if dk else 'n'}"
+            f"  {name}{mark}"
         )
     print(f"\nAUDIT {len(rows)} queries, {len(flagged)} flagged (width > {wide} or gate hit)")
     spark.stop()
